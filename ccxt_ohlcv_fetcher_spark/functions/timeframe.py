@@ -13,7 +13,9 @@ in ``window()`` / timestamp arithmetic; calendar units (M/y) become
 from __future__ import annotations
 
 import re
+from datetime import datetime, timedelta, timezone
 
+from dateutil.relativedelta import relativedelta
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -29,6 +31,9 @@ _UNITS = {
     "M": ("month", None),  # calendar interval (`:157-162`)
     "y": ("year", None),
 }
+
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 def parse_timeframe(timeframe: str) -> tuple[int, str]:
@@ -70,6 +75,22 @@ def timeframe_seconds(timeframe: str) -> int:
     if secs is None:
         raise ValueError(f"calendar timeframe {timeframe!r} has no fixed length")
     return n * secs
+
+
+def candle_close_ms(ts_ms: int, timeframe: str) -> int:
+    """Epoch-ms at which the candle opened at ``ts_ms`` closes: the
+    driver-side twin of ``timestamp_millis(ts) +
+    timeframe_interval_expr(timeframe)`` under a UTC session. Fixed
+    units add their length; calendar units add months or years in UTC
+    with ``relativedelta`` (`ccxt-ohlcv-fetch.py:159-162`), which clamps
+    the day of month as Spark's interval arithmetic does."""
+    n, unit = parse_timeframe(timeframe)
+    secs = _UNITS[unit][1]
+    if secs is not None:
+        return ts_ms + n * secs * 1000
+    opened = _EPOCH + timedelta(milliseconds=ts_ms)
+    step = relativedelta(months=n) if unit == "M" else relativedelta(years=n)
+    return ts_ms + (opened + step - opened) // timedelta(milliseconds=1)
 
 
 def timeframe_interval_expr(timeframe: str) -> Column:

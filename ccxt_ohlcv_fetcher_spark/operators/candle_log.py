@@ -21,6 +21,17 @@ winner's delta files for overlapping (exchange,symbol,timeframe,
 timestamp) keys and re-stages minus the conflicts, so the PK-uniqueness
 invariant holds under any interleaving — not just under a lock.
 
+Two batch kinds share that protocol. A DataFrame (streaming sinks,
+migration, restatement inputs) is anti-joined and staged by Spark
+jobs. A pyarrow Table — the page the paging loop already holds on the
+driver, at most a few hundred rows — is anti-joined against pyarrow
+reads of the candidate files' key columns and staged as one sorted
+parquet file per key, so a page goes from fetch to commit without a
+Spark job; per-job scheduling, not data volume, was the cost of a
+live append. A candidate file carrying deletion vectors turns the
+Table into a DataFrame for that anti-join, since only the Spark read
+applies them.
+
 File pruning comes from per-file min/max stats recorded in the
 manifest (`SnapshotStore(stats_cols=...)`), replacing `CandleDataset`'s
 Hive `dt=` directory pruning: partition values live as ordinary data
@@ -34,6 +45,9 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -164,62 +178,17 @@ class SnapshotCandleDataset:
 
     # --- writes -----------------------------------------------------------
 
-    def _existing_keys(self, batch_ranges: list[dict], version: int) -> DataFrame | None:
-        """Key columns of every head file that could overlap the batch.
-
-        DV-aware: reads through ``_read_files_live`` so positions removed
-        by ``delete_where_dv`` do NOT count as existing — otherwise a
-        delete-then-refetch of a corrected candle would be silently
-        dropped by the idempotency anti-join (the row is logically gone
-        but its key still sits in the physical file)."""
-        files: set[str] = set()
-        for r in batch_ranges:
-            files.update(self.store.pruned_files(r, version=version))
-        if not files:
-            return None
-        return self.store._read_files_live(
-            sorted(files), self.store.manifest(version)
-        ).select(*KEY_COLS)
-
-    def _batch_ranges(self, batch: DataFrame) -> list[dict]:
-        """One stats-range per (exchange,symbol,timeframe) group in the
-        batch, bounded below by the group's min ts — appends only ever
-        overlap the tail, so older files prune away (CandleDataset's
-        row-group trick, lifted to the manifest level)."""
-        stats = (
-            batch.groupBy(*PARTITION_COLS)
-            .agg(F.min("timestamp").alias("_min_ts"))
-            .collect()
-        )
-        return [
-            {
-                "exchange": (r["exchange"], r["exchange"]),
-                "symbol": (r["symbol"], r["symbol"]),
-                "timeframe": (r["timeframe"], r["timeframe"]),
-                "timestamp": (r["_min_ts"], None),
-            }
-            for r in stats
-        ]
-
-    @staticmethod
-    def _cluster(df: DataFrame, n_keys: int) -> DataFrame:
-        """Stage layout: ~one sorted file per (exchange,symbol,timeframe)
-        group, so manifest stats are single-keyed (stats-only resume)
-        and row-group min/max stay selective (R13 explicit order,
-        reference `:70`). At 100 TB the same expression scales the file
-        count with the batch's key count, not the cluster's task count.
-        """
-        return df.repartitionByRange(
-            max(1, n_keys), *KEY_COLS
-        ).sortWithinPartitions(*KEY_COLS)
-
     def append_idempotent(
         self,
-        batch: DataFrame,
+        batch: DataFrame | pa.Table,
         txn: tuple[str, int] | None = None,
         max_retries: int = 10,
     ) -> int:
         """R2+R3 as a log transaction. Returns rows actually appended.
+
+        ``batch`` is a DataFrame, or a pyarrow Table in the storage
+        schema — a page the paging loop already holds on the driver,
+        which goes from anti-join to commit without a Spark job.
 
         Protocol: anti-join the batch against the head's (pruned)
         existing keys, stage the surviving rows, CAS the next manifest.
@@ -235,21 +204,36 @@ class SnapshotCandleDataset:
             last = store.last_txn(txn[0])
             if last is not None and txn[1] <= last:
                 return 0
-        ranges = self._batch_ranges(batch)
+        pending = (
+            _FrameBatch(self, batch)
+            if isinstance(batch, DataFrame)
+            else _ArrowBatch(self, batch)
+        )
+        ranges = pending.ranges()
         if not ranges:
             return 0
         base = store.latest_version()
-        existing = self._existing_keys(ranges, base)
-        deduped = batch
-        if existing is not None:
-            deduped = batch.join(
-                F.broadcast(existing), on=list(KEY_COLS), how="left_anti"
-            ).select(*batch.columns)  # joins reorder; schema guard is exact
-        deduped = deduped.localCheckpoint(eager=True)
-        n = deduped.count()
-        if n == 0:
+        # only files overlapping a key's [min, max] ts can hold one of
+        # its keys: a live append reads the tail file, a refetch over a
+        # long history reads the files its page spans (CandleDataset's
+        # row-group trick, lifted to the manifest level)
+        candidates: set[str] = set()
+        for ex, sym, tf, lo, hi in ranges:
+            candidates.update(
+                store.pruned_files(
+                    {
+                        "exchange": (ex, ex),
+                        "symbol": (sym, sym),
+                        "timeframe": (tf, tf),
+                        "timestamp": (lo, hi),
+                    },
+                    version=base,
+                )
+            )
+        pending = pending.without(sorted(candidates), store.manifest(base))
+        if pending.n == 0:
             return 0
-        files = store._stage(self._cluster(deduped, len(ranges)))
+        files = pending.stage(len(ranges))
         staged_schema = store._pending_schema
         for _ in range(max_retries):
             head = store.latest_version()
@@ -270,31 +254,16 @@ class SnapshotCandleDataset:
                 base_files = set(store.manifest(base)["files"])
                 delta = [f for f in head_manifest["files"] if f not in base_files]
                 if delta:
-                    # DV-aware for the same delete-then-refetch reason
-                    # as _existing_keys (a racing delete_where_dv may
-                    # vector rows out of the winner's files)
-                    delta_keys = self.store._read_files_live(
-                        delta, head_manifest
-                    ).select(*KEY_COLS)
-                    reduced = (
-                        deduped.join(
-                            F.broadcast(delta_keys),
-                            on=list(KEY_COLS),
-                            how="left_anti",
-                        )
-                        .select(*deduped.columns)
-                        .localCheckpoint(eager=True)
-                    )
-                    n_reduced = reduced.count()
-                    if n_reduced < n:
-                        if n_reduced == 0:
+                    reduced = pending.without(delta, head_manifest)
+                    if reduced.n < pending.n:
+                        if reduced.n == 0:
                             return 0  # every row already won elsewhere
-                        deduped, n = reduced, n_reduced
-                        files = store._stage(self._cluster(deduped, len(ranges)))
+                        pending = reduced
+                        files = pending.stage(len(ranges))
                 base = head
             merged = store.manifest(base)["files"] + files
             if store._try_commit(base, merged, "append", txn=txn):
-                return n
+                return pending.n
         raise CommitConflict(f"append lost the CAS race {max_retries} times")
 
     # --- maintenance ------------------------------------------------------
@@ -468,3 +437,116 @@ class SnapshotCandleDataset:
         (write cost = deleted rows, not touched files). Vectors are
         materialized by the next ``compact()``."""
         return self.store.delete_where_dv(condition)
+
+
+class _FrameBatch:
+    """An append batch on the Spark path: key ranges, anti-joins and
+    staging run as Spark jobs."""
+
+    def __init__(self, ds: SnapshotCandleDataset, df: DataFrame, n: int | None = None):
+        self.ds, self.df, self.n = ds, df, n
+
+    def ranges(self) -> list[tuple]:
+        """(exchange, symbol, timeframe, min ts, max ts) per key group."""
+        return [
+            tuple(r)
+            for r in self.df.groupBy(*PARTITION_COLS)
+            .agg(F.min("timestamp"), F.max("timestamp"))
+            .collect()
+        ]
+
+    def without(self, files: list[str], manifest: dict) -> _FrameBatch:
+        """The batch minus every key live in ``files``, materialized and
+        counted. DV-aware: reads through ``_read_files_live`` so
+        positions removed by ``delete_where_dv`` do NOT count as
+        existing — otherwise a delete-then-refetch of a corrected candle
+        would be silently dropped (the row is logically gone but its
+        key still sits in the physical file)."""
+        df = self.df
+        if files:
+            keys = self.ds.store._read_files_live(files, manifest).select(*KEY_COLS)
+            df = df.join(
+                F.broadcast(keys), on=list(KEY_COLS), how="left_anti"
+            ).select(*self.df.columns)  # joins reorder; schema guard is exact
+        df = df.localCheckpoint(eager=True)
+        return _FrameBatch(self.ds, df, df.count())
+
+    def stage(self, n_keys: int) -> list[str]:
+        """Stage layout: ~one sorted file per (exchange,symbol,timeframe)
+        group, so manifest stats are single-keyed (stats-only resume)
+        and row-group min/max stay selective (R13 explicit order,
+        reference `:70`). At 100 TB the same expression scales the file
+        count with the batch's key count, not the cluster's task count.
+        """
+        return self.ds.store._stage(
+            self.df.repartitionByRange(max(1, n_keys), *KEY_COLS)
+            .sortWithinPartitions(*KEY_COLS)
+        )
+
+
+class _ArrowBatch:
+    """An append batch held on the driver as a pyarrow Table in the
+    storage schema: key ranges, the anti-join (pyarrow reads of the
+    candidate files' key columns) and staging (one sorted parquet file
+    per key) run without a Spark job."""
+
+    def __init__(self, ds: SnapshotCandleDataset, table: pa.Table):
+        self.ds, self.table, self.n = ds, table, table.num_rows
+
+    def to_frame(self) -> _FrameBatch:
+        return _FrameBatch(self.ds, self.ds.spark.createDataFrame(self.table))
+
+    def ranges(self) -> list[tuple]:
+        groups = self.table.group_by(list(PARTITION_COLS)).aggregate(
+            [("timestamp", "min"), ("timestamp", "max")]
+        )
+        return [
+            (*(g[c] for c in PARTITION_COLS), g["timestamp_min"], g["timestamp_max"])
+            for g in groups.to_pylist()
+        ]
+
+    def without(self, files: list[str], manifest: dict) -> _ArrowBatch | _FrameBatch:
+        """The batch minus every key present in ``files``: a pyarrow
+        read of the files' key columns (physical names under column
+        mapping) within the batch's timestamp range, then a hash
+        anti-join. A file with deletion vectors hands the batch to the
+        Spark path, whose live-row read applies them."""
+        dvs = manifest.get("dvs", {})
+        if any(f in dvs for f in files):
+            return self.to_frame().without(files, manifest)
+        if not files or not self.n:
+            return self
+        mapping = manifest.get("column_mapping") or {}
+        ts = mapping.get("timestamp", "timestamp")
+        lo, hi = pc.min_max(self.table.column("timestamp")).values()
+        # Spark-written files mark literal columns NOT NULL; cast to the
+        # page's key schema so files of both writers concatenate
+        key_schema = self.table.select(list(KEY_COLS)).schema
+        existing = pa.concat_tables(
+            pq.read_table(
+                os.path.join(self.ds.store.path, f),
+                columns=[mapping.get(c, c) for c in KEY_COLS],
+                filters=[(ts, ">=", lo.as_py()), (ts, "<=", hi.as_py())],
+                partitioning=None,
+            )
+            .rename_columns(list(KEY_COLS))
+            .cast(key_schema)
+            for f in files
+        )
+        if not existing.num_rows:
+            return self
+        kept = self.table.join(existing, keys=list(KEY_COLS), join_type="left anti")
+        return _ArrowBatch(self.ds, kept)
+
+    def stage(self, n_keys: int) -> list[str]:
+        """One file per (exchange, symbol, timeframe), sorted by
+        timestamp — the layout the Spark path stages."""
+        parts = [
+            self.table.filter(
+                (pc.field("exchange") == ex)
+                & (pc.field("symbol") == sym)
+                & (pc.field("timeframe") == tf)
+            ).sort_by("timestamp")
+            for ex, sym, tf, *_ in sorted(self.ranges())
+        ]
+        return self.ds.store._stage_arrow(parts)

@@ -14,6 +14,10 @@ Reference behavior being re-expressed (citations into
   `:141-163`; applied `:122-124`). The reference computes this in naive
   local time (`:151-152`) — a bug we fix by doing the arithmetic on UTC
   instants.
+- The paging loop applies R9 and R10 to a page it holds on the driver
+  with the same predicates in Python (`candle_close_ms`) and projects
+  it with `ohlcv_page_table`; the DataFrame operators here remain the
+  reference those driver-side steps are tested against.
 - R3 conflict-ignoring upsert: on PK violation drop the newest row,
   rollback, retry (`:71-75`) — net semantics "INSERT OR IGNORE". Spark
   has no storage-side PK, so idempotency becomes an explicit left-anti
@@ -35,7 +39,9 @@ from __future__ import annotations
 import os
 import shutil
 from collections.abc import Iterable
+from decimal import ROUND_HALF_UP, Context, Decimal
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +49,7 @@ from ccxt_ohlcv_fetcher_spark.functions.timeframe import timeframe_interval_expr
 from ccxt_ohlcv_fetcher_spark.schemas import PRICE_TYPE
 
 PARTITION_COLS = ("exchange", "symbol", "timeframe")
+PRICE_COLS = ("open", "high", "low", "close", "volume")
 
 # 2014-01-01T00:00:00Z, the reference's DEFAULT_SINCE (`:26`).
 DEFAULT_SINCE_MS = 1388534400000
@@ -73,12 +80,76 @@ def project_ohlcv_rows(
     # streaming sink, SQLite migration): DecimalType faithful to the
     # reference's lossless string-stored prices (:39-43). Mixed
     # double/decimal appends into one dataset would conflict on read.
-    for c in ("open", "high", "low", "close", "volume"):
+    for c in PRICE_COLS:
         df = df.withColumn(c, F.col(c).cast(PRICE_TYPE))
     return (
         df.withColumn("exchange", F.lit(exchange))
         .withColumn("symbol", F.lit(normalize_symbol(symbol)))
         .withColumn("timeframe", F.lit(timeframe))
+    )
+
+
+# Storage schema of a projected page, as the pyarrow schema Spark maps
+# back to `project_ohlcv_rows`'s output types.
+OHLCV_ARROW_SCHEMA = pa.schema(
+    [
+        ("timestamp", pa.int64()),
+        *((c, pa.decimal128(PRICE_TYPE.precision, PRICE_TYPE.scale)) for c in PRICE_COLS),
+        *((c, pa.string()) for c in PARTITION_COLS),
+    ]
+)
+
+# Largest |price| converted on the driver. Below it, the shortest
+# round-trip repr of a double is what Spark 4.1 on JDK 17 parses in
+# CAST(double AS decimal(38,12)); at and above 1e16 the JDK prints
+# longer digit strings (8.383218505861398e16 -> 83832185058613984,
+# 1e23 -> 99999999999999990000000), so such pages take Spark's cast.
+DRIVER_PRICE_LIMIT = 1e16
+_PRICE_QUANTUM = Decimal(1).scaleb(-PRICE_TYPE.scale)
+_PRICE_CONTEXT = Context(prec=PRICE_TYPE.precision, rounding=ROUND_HALF_UP)
+
+
+def price_to_decimal(x: float | None) -> Decimal | None:
+    """``CAST(x AS decimal(38,12))`` on the driver, for finite
+    |x| < ``DRIVER_PRICE_LIMIT``: the double's repr, rounded half-up to
+    12 places. Arrow's own float->decimal cast rounds the binary value
+    instead, which disagrees with Spark on many doubles."""
+    if x is None:
+        return None
+    return Decimal(repr(float(x))).quantize(_PRICE_QUANTUM, context=_PRICE_CONTEXT)
+
+
+def ohlcv_page_table(
+    rows: Iterable[Iterable],
+    exchange: str,
+    symbol: str,
+    timeframe: str,
+) -> pa.Table | None:
+    """R8 on the driver: `project_ohlcv_rows` as a pyarrow Table, for a
+    page the paging loop already holds in memory. Returns None when a
+    row is not 6 wide, a timestamp is not an ``int``, or a price is not
+    a ``float`` (or None), is not finite, or is at or above
+    ``DRIVER_PRICE_LIMIT``: the caller then projects with
+    `project_ohlcv_rows`, whose schema check and Spark cast decide
+    those values (ints, bools and numpy scalars in a double column
+    raise; NaN and infinities become NULL on Spark 4.1)."""
+    cols: list[list] = [[] for _ in range(1 + len(PRICE_COLS))]
+    for r in rows:
+        ts, *prices = r
+        if len(prices) != len(PRICE_COLS) or type(ts) is not int:
+            return None  # Spark's projection reports the row shape
+        for v in prices:
+            if v is not None and not (
+                type(v) is float and abs(v) < DRIVER_PRICE_LIMIT
+            ):
+                return None
+        cols[0].append(ts)
+        for out, v in zip(cols[1:], prices):
+            out.append(price_to_decimal(v))
+    n = len(cols[0])
+    tags = (exchange, normalize_symbol(symbol), timeframe)
+    return pa.Table.from_arrays(
+        [*cols, *([t] * n for t in tags)], schema=OHLCV_ARROW_SCHEMA
     )
 
 
@@ -219,7 +290,7 @@ class CandleDataset:
         )
         return row["m"]
 
-    def append_idempotent(self, batch: DataFrame) -> int:
+    def append_idempotent(self, batch: DataFrame | pa.Table) -> int:
         """R2+R3: bulk append with INSERT-OR-IGNORE semantics (`:69-75`).
 
         Anti-join the incoming batch against existing keys, pruned two
@@ -229,8 +300,11 @@ class CandleDataset:
         appends only ever overlap the tail, and parquet min/max stats
         skip all older row groups. The pruned key set is broadcast, so
         the batch never shuffles. Re-appending an identical batch is a
-        no-op.
+        no-op. A pyarrow Table (a driver-held page) is appended as the
+        DataFrame Spark builds from it.
         """
+        if isinstance(batch, pa.Table):
+            batch = self.spark.createDataFrame(batch)
         if self._exists():
             keys = [*PARTITION_COLS, "timestamp"]
             stats = batch.select(

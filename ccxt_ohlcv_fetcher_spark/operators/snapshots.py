@@ -60,6 +60,7 @@ import glob
 import json
 import os
 import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -161,6 +162,39 @@ def _version_at_timestamp_walk(head: int, manifest_path, ts: float) -> int:
             "(predates the log, or that history was pruned)"
         )
     return best
+
+
+class _PerThread:
+    """Store attribute holding one value per (store, thread).
+
+    A write's stage -> commit hand-off (staged schema, per-file stats,
+    column mapping, constraint set) is per-call state. On the shared
+    instance, two writer threads appending through one store would
+    replace each other's pending stats between ``_stage`` and
+    ``_try_commit``, and commit files without their stats or fail on a
+    missing key. An unset value raises ``AttributeError``, so
+    ``getattr(store, name, default)``, ``hasattr`` and ``del`` behave as
+    for a plain attribute."""
+
+    def __set_name__(self, owner, name: str) -> None:
+        self.name = name
+
+    def __get__(self, obj, objtype=None):
+        if obj is None:
+            return self
+        try:
+            return getattr(obj._thread_state(), self.name)
+        except AttributeError:
+            raise AttributeError(self.name) from None
+
+    def __set__(self, obj, value) -> None:
+        setattr(obj._thread_state(), self.name, value)
+
+    def __delete__(self, obj) -> None:
+        try:
+            delattr(obj._thread_state(), self.name)
+        except AttributeError:
+            raise AttributeError(self.name) from None
 
 
 # --- delta-manifest reconstruction (checkpoint + tail) --------------------
@@ -658,6 +692,19 @@ def _ckpt_read_parquet(path: str) -> dict:
 
 
 class SnapshotStore:
+    # per-call write state, one value per writer thread (see _PerThread)
+    _pending_schema = _PerThread()
+    _pending_column_mapping = _PerThread()
+    _pending_cm_burned = _PerThread()
+    _pending_constraints = _PerThread()
+    _pending_stats = _PerThread()
+    _staging_physical = _PerThread()
+    _staged_constraints = _PerThread()
+
+    def _thread_state(self) -> threading.local:
+        # setdefault is atomic, so racing first writers share one local
+        return self.__dict__.setdefault("_tls", threading.local())
+
     def __init__(
         self,
         spark: SparkSession,
@@ -715,6 +762,8 @@ class SnapshotStore:
         # version -> reconstructed state; bounded (immutable per
         # version, so never invalidated — only evicted)
         self._state_cache: dict[int, dict] = {}
+        # writer threads share one store: eviction must not interleave
+        self._cache_lock = threading.Lock()
         # instrumentation: what the last _state() reconstruction
         # touched — {"version", "checkpoint": v|None, "tail_manifests"}
         self.last_head_read: dict | None = None
@@ -802,9 +851,10 @@ class SnapshotStore:
         return None
 
     def _cache_put(self, version: int, state: dict) -> None:
-        if len(self._state_cache) >= 64:
-            self._state_cache.pop(next(iter(self._state_cache)))
-        self._state_cache[version] = state
+        with self._cache_lock:
+            if len(self._state_cache) >= 64:
+                self._state_cache.pop(next(iter(self._state_cache)))
+            self._state_cache[version] = state
 
     def _state(self, v: int) -> dict:
         """Reconstruct the full snapshot state of version ``v``: walk
@@ -1289,13 +1339,59 @@ class SnapshotStore:
         df.write.parquet(commit_dir)
 
     def _stage(self, df: DataFrame, allow_schema_change: bool = False) -> list[str]:
+        """Write ``df`` as one commit's data files and register them
+        (schema guard, constraints, stats) for the next ``_try_commit``
+        of this thread. Returns the files' table-relative paths."""
+        incoming = [[f.name, f.dataType.simpleString()] for f in df.schema]
+        mapping = self._stage_schema(incoming, allow_schema_change)
+        if mapping:
+            df = df.select(
+                *[
+                    F.col(f"`{n.replace('`', '``')}`").alias(mapping[n])
+                    for n, _t in incoming
+                ]
+            )
+        commit_dir = self._new_commit_dir()
+        self._write_stage_files(df, commit_dir)
+        return self._register_staged(commit_dir, incoming, mapping)
+
+    def _stage_arrow(self, tables: list) -> list[str]:
+        """``_stage`` for rows already in driver memory: each pyarrow
+        table (all of one schema) is written as one parquet file, in
+        order, with no Spark job. Guard and registration are
+        ``_stage``'s; the ``_write_stage_files`` layout hook is not
+        applied, so a store that imposes a layout must stage through
+        ``_stage``."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_type
+
+        incoming = [
+            [f.name, from_arrow_type(f.type).simpleString()]
+            for f in tables[0].schema
+        ]
+        mapping = self._stage_schema(incoming, allow_schema_change=False)
+        commit_dir = self._new_commit_dir()
+        os.makedirs(commit_dir)
+        for i, t in enumerate(tables):
+            if mapping:
+                t = t.rename_columns([mapping[n] for n in t.column_names])
+            pq.write_table(t, os.path.join(commit_dir, f"part-{i:05d}.parquet"))
+        return self._register_staged(commit_dir, incoming, mapping)
+
+    def _new_commit_dir(self) -> str:
+        return os.path.join(self._data_dir, f"commit-{uuid.uuid4().hex[:12]}")
+
+    def _stage_schema(self, incoming: list, allow_schema_change: bool) -> dict:
+        """Check a staged write's ``[[name, type]]`` schema against the
+        head and record it as pending; returns the logical->physical
+        column mapping the files must be written under ({} when the
+        table has none)."""
         # schema guard: an append whose columns drift from the committed
         # schema would silently corrupt every future multi-file read —
         # refuse it at stage time. overwrite() opts out (a full replace
         # MAY evolve the schema; the manifest records the new one).
         head = self.manifest()
         committed = head.get("schema")
-        incoming = [[f.name, f.dataType.simpleString()] for f in df.schema]
         if (
             not allow_schema_change
             and committed is not None
@@ -1354,18 +1450,18 @@ class SnapshotStore:
             # bucketBy writer repartitions on the bucket key, which at
             # this point carries its physical name)
             self._staging_physical = dict(mapping)
-            df = df.select(
-                *[
-                    F.col(f"`{n.replace('`', '``')}`").alias(mapping[n])
-                    for n, _t in incoming
-                ]
-            )
         else:
             self._pending_column_mapping = None  # inherit (absent)
             self._staging_physical = {}
-        token = uuid.uuid4().hex[:12]
-        commit_dir = os.path.join(self._data_dir, f"commit-{token}")
-        self._write_stage_files(df, commit_dir)
+        return mapping
+
+    def _register_staged(
+        self, commit_dir: str, incoming: list, mapping: dict
+    ) -> list[str]:
+        """Register the parquet files just written under ``commit_dir``
+        for this thread's next commit: drop zero-row files, enforce the
+        table's CHECK constraints, and record per-file stats, row and
+        byte counts and blooms. Returns their table-relative paths."""
         files = sorted(
             glob.glob(os.path.join(commit_dir, "*.parquet"))
             + glob.glob(os.path.join(commit_dir, "**", "*.parquet"))

@@ -8,14 +8,18 @@ tail candle (`:122-124`), persist, repeat. Errors back off
 (``sleep(300)``, `:27,:99-101`); rate limiting lives in the client
 (`enableRateLimit`, `:219`, plus ``EXTRA_RATE_LIMIT`` sleep `:97`).
 
-Spark-first shape: the page fetch is inherently driver-side, sequential
-per (exchange,symbol,timeframe) — the cursor of page N+1 depends on
-page N — so the *loop* stays a thin driver loop (exactly like the
-reference), while every data-shaped step (projection, overlap drop,
-tail trim, idempotent append) is a distributed DataFrame op. Fan-out
-across symbols (the reference's 4-process ``fetch_exchange.sh``) is a
-driver thread pool; the storage is one partitioned dataset, so writers
-never contend.
+Shape: the page fetch is inherently driver-side, sequential per
+(exchange,symbol,timeframe) — the cursor of page N+1 depends on page N
+— and a ccxt page is at most a few hundred rows already in driver
+memory. So the loop stays a thin driver loop (exactly like the
+reference) and keeps the page there: overlap drop and tail trim are
+list filters, the projection builds a pyarrow Table in the storage
+schema, and a `SnapshotCandleDataset` commits it without a Spark job
+(operators/candle_log.py). Prices outside the range the driver
+converts exactly as Spark does go through the DataFrame projection
+instead. Fan-out across symbols (the reference's 4-process
+``fetch_exchange.sh``) is a driver thread pool; the storage is one
+partitioned dataset, so writers never contend.
 
 No live network in this repo: ``FixturePagingSource`` replays a
 deterministic candle grid, page-sized like a ccxt response, including
@@ -34,12 +38,11 @@ from pyspark.sql import SparkSession
 
 from ccxt_ohlcv_fetcher_spark.sources.catalog import Catalog
 
-from ccxt_ohlcv_fetcher_spark.functions.timeframe import timeframe_seconds
+from ccxt_ohlcv_fetcher_spark.functions.timeframe import candle_close_ms
 from ccxt_ohlcv_fetcher_spark.operators.ingest import (
     DEFAULT_SINCE_MS,
     CandleDataset,
-    drop_incomplete_tail,
-    drop_overlap,
+    ohlcv_page_table,
     project_ohlcv_rows,
 )
 
@@ -90,8 +93,10 @@ def ingest_candles(
 
     Resume order mirrors `check_args` `:275-287`: explicit ``since``
     beats the stored offset beats DEFAULT_SINCE (`:26`). Each page is
-    projected (R8), overlap-dropped (R9), tail-trimmed (R10), and
-    appended idempotently (R2+R3). ``quit_when_caught_up`` is the
+    overlap-dropped (R9, `drop_overlap`'s ``ts > since``) and
+    tail-trimmed (R10, `drop_incomplete_tail`'s candle-close rule,
+    calendar-aware) on the driver, projected (R8) and appended
+    idempotently (R2+R3). ``quit_when_caught_up`` is the
     reference's ``-q`` flag (`:128-129`). A fetch error sleeps
     ``error_backoff_secs`` and retries the same cursor (`:27,:99-101`;
     ``max_errors=0`` = retry forever like the reference; tests bound it).
@@ -110,7 +115,6 @@ def ingest_candles(
     if cursor is None:
         cursor = DEFAULT_SINCE_MS
 
-    tf_ms = timeframe_seconds(timeframe) * 1000
     while stats.pages < max_pages:
         if throttle_secs:
             time.sleep(throttle_secs)  # EXTRA_RATE_LIMIT analog (`:97`)
@@ -127,22 +131,25 @@ def ingest_candles(
             if quit_when_caught_up:
                 break
             continue
-        df = project_ohlcv_rows(spark, page, exchange, symbol, timeframe)
-        if cursor_row_persisted:
-            df = drop_overlap(df, cursor)
-        df = drop_incomplete_tail(df, timeframe, now_ms=now_ms)
+        closed = [r for r in page if candle_close_ms(r[0], timeframe) <= now_ms]
+        rows = [r for r in closed if r[0] > cursor] if cursor_row_persisted else closed
+        batch = ohlcv_page_table(rows, exchange, symbol, timeframe)
+        if batch is None:
+            batch = project_ohlcv_rows(spark, rows, exchange, symbol, timeframe)
         with write_lock or nullcontext():
-            stats.rows_appended += dataset.append_idempotent(df)
-        caught_up = page[-1][0] + tf_ms > now_ms or len(page) < source.page_size
+            stats.rows_appended += dataset.append_idempotent(batch)
+        caught_up = (
+            candle_close_ms(page[-1][0], timeframe) > now_ms
+            or len(page) < source.page_size
+        )
         # Advance to the last PERSISTED candle, not the last fetched one:
         # the reference advances `since` before trimming the incomplete
         # tail (`:119-124`), so a continuous (non -q) run re-fetches that
         # candle as the overlap row and strips it forever — the closed
         # version of that candle is never stored. Anchoring the cursor to
         # persisted data re-fetches it until it closes.
-        last_complete = [r[0] for r in page if r[0] + tf_ms <= now_ms]
-        if last_complete:
-            cursor = max(last_complete)
+        if closed:
+            cursor = max(r[0] for r in closed)
             cursor_row_persisted = True
         if caught_up and quit_when_caught_up:
             break

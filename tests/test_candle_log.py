@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -359,3 +360,201 @@ def test_retention_neutralizes_stale_pending_mapping(spark, ds):
     assert not m.get("column_mapping")
     assert not m.get("column_mapping_burned")
     assert ds.read().count() == 4
+
+
+def test_two_writer_threads_share_one_store(spark, ds):
+    """Per-call stage state is per writer thread: two threads making
+    repeated DataFrame appends of disjoint keys through ONE dataset
+    both stage before either commits (a barrier holds them), and every
+    committed file still carries its own `_rows`/`_bytes` stats."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=120)
+    stage = ds.store._stage
+
+    def stage_then_wait(*a, **kw):
+        files = stage(*a, **kw)
+        barrier.wait()
+        return files
+
+    ds.store._stage = stage_then_wait
+    errors: list[Exception] = []
+
+    def writer(symbol: str) -> None:
+        try:
+            for lo in range(0, 12, 3):
+                assert ds.append_idempotent(batch(spark, lo, lo + 3, symbol=symbol)) == 3
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+            barrier.abort()
+
+    threads = [threading.Thread(target=writer, args=(s,)) for s in ("A/USD", "B/USD")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert ds.read().count() == 24
+    m = ds.store.manifest()
+    for f in m["files"]:
+        assert {"_rows", "_bytes"} <= set(m["stats"][f]), f
+    assert sum(m["stats"][f]["_rows"] for f in m["files"]) == 24
+
+
+def _page(rows, symbol="XRP/USD", exchange="e"):
+    from ccxt_ohlcv_fetcher_spark.operators.ingest import ohlcv_page_table
+
+    return ohlcv_page_table(rows, exchange, symbol, "1m")
+
+
+def _jobs_during(spark, fn):
+    """(fn's result, number of Spark jobs it ran on this thread)."""
+    sc = spark.sparkContext
+    group = f"probe-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_arrow_page_commits_without_spark_job(spark, ds):
+    """A driver-held page goes from anti-join to commit with no Spark
+    job: pyarrow key reads, one sorted file per key, manifest-only
+    stats."""
+    ds.append_idempotent(batch(spark, 0, 5))
+    n, jobs = _jobs_during(spark, lambda: ds.append_idempotent(_page(grid(4, T0 + 3 * MIN))))
+    assert (n, jobs) == (2, 0)
+    # two keys in one table: one file per key, each single-keyed
+    two = pa.concat_tables([_page(grid(2, T0 + 7 * MIN)), _page(grid(2), symbol="BTC/USD")])
+    n, jobs = _jobs_during(spark, lambda: ds.append_idempotent(two))
+    assert (n, jobs) == (4, 0)
+    assert ds.read().count() == 11
+    assert ds.fragmentation()["files_per_key"].get(None) is None
+    assert ds.resume_offset("e", "BTC/USD", "1m") == T0 + MIN
+    assert ds.append_idempotent(two) == 0
+
+
+def test_arrow_page_fallback_triggers(spark, tmp_path):
+    """Table features on the driver path: deletion vectors on a
+    candidate file send the page to the Spark anti-join (the corrected
+    candle lands), CHECK constraints refuse an inverted candle
+    atomically, and column mapping reads and writes physical names
+    with no Spark job."""
+    from ccxt_ohlcv_fetcher_spark.operators.snapshots import ConstraintViolation
+
+    # deletion vectors: delete-then-refetch lands the corrected row
+    ds = SnapshotCandleDataset(spark, str(tmp_path / "dv"))
+    ds.append_idempotent(_page(grid(5)))
+    bad_ts = T0 + 4 * MIN
+    ds.delete_where_dv(f"timestamp = {bad_ts}")
+    n, jobs = _jobs_during(spark, lambda: ds.append_idempotent(_page(grid(2, T0 + 3 * MIN))))
+    assert n == 1 and jobs > 0
+    assert ds.read().count() == 5
+    assert ds.resume_offset("e", "XRP/USD", "1m") == bad_ts
+
+    # constraints: inverted candle refused, well-formed pages still flow
+    ds = SnapshotCandleDataset(spark, str(tmp_path / "ck"))
+    ds.append_idempotent(_page(grid(5)))
+    ds.enable_ohlcv_constraints()
+    with pytest.raises(ConstraintViolation, match="low_le_body"):
+        ds.append_idempotent(_page([[T0 + 100 * MIN, 100.0, 101.0, 100.5, 100.2, 5.0]]))
+    assert ds.read().count() == 5
+    assert ds.append_idempotent(_page(grid(3, T0 + 5 * MIN))) == 3
+    assert ds.read().count() == 8
+
+    # column mapping: appended pages read back under logical names
+    ds = SnapshotCandleDataset(spark, str(tmp_path / "cm"))
+    ds.append_idempotent(_page(grid(5)))
+    ds.store.enable_column_mapping()
+    n, jobs = _jobs_during(spark, lambda: ds.append_idempotent(_page(grid(4, T0 + 3 * MIN))))
+    assert (n, jobs) == (2, 0)
+    got = sorted((r["timestamp"], float(r["close"])) for r in ds.read().collect())
+    assert got == [(r[0], r[4]) for r in grid(5) + grid(4, T0 + 3 * MIN)[2:]]
+    assert ds.resume_offset("e", "XRP/USD", "1m") == T0 + 6 * MIN
+
+
+def test_refetch_over_long_history_reads_only_the_page_range(spark, ds, monkeypatch):
+    """An explicit-``since`` refetch deep in a stored history checks its
+    keys against the files its page spans, and reads from them only the
+    keys inside the page's timestamp range, from files of both writers
+    (Spark-written and driver-written)."""
+    import pyarrow.parquet as pq
+
+    for lo in range(0, 600, 100):
+        ds.append_idempotent(batch(spark, lo, lo + 100) if lo % 200 else _page(grid(100, T0 + lo * MIN)))
+    read: list[int] = []
+    real = pq.read_table
+
+    def counting(*a, **kw):
+        t = real(*a, **kw)
+        read.append(t.num_rows)
+        return t
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    assert ds.append_idempotent(_page(grid(20, T0 + 150 * MIN))) == 0
+    assert read == [20]
+    read.clear()
+    assert ds.append_idempotent(_page(grid(20, T0 + 190 * MIN))) == 0
+    assert sorted(read) == [10, 10]
+    monkeypatch.undo()
+    assert ds.read().count() == 600
+    assert ds.fragmentation()["n_files"] == 6
+
+
+def test_arrow_and_frame_paths_store_the_same_table(spark, tmp_path, monkeypatch):
+    """One page sequence — overlap rows, open tail candles, re-delivered
+    pages, explicit-``since`` refetches, two writer threads — through
+    the driver path and through the DataFrame path stores the same
+    table: rows, resume offsets, manifest schema, files per key."""
+    from ccxt_ohlcv_fetcher_spark.sources import paging
+    from ccxt_ohlcv_fetcher_spark.sources.catalog import Catalog, ExchangeMeta
+
+    symbols = ["A/USD", "B/USD"]
+    catalog = Catalog({"x": ExchangeMeta("x", symbols=set(symbols), timeframes={"1m"})})
+    rows = {
+        s: [[T0 + j * MIN, 1000.0 * i + j * 0.37, 1000.0 * i + j + 1.125,
+             1000.0 * i + j - 1.5, 1000.0 * i + j + 0.1, 5.0 + j / 3]
+            for j in range(80)]
+        for i, s in enumerate(symbols)
+    }
+
+    class Source(paging.FixturePagingSource):
+        redeliver = False
+
+        def fetch_ohlcv(self, since_ms):
+            if self.redeliver:  # a stale page from before the cursor
+                self.redeliver = False
+                since_ms -= 7 * MIN
+            return super().fetch_ohlcv(since_ms)
+
+    def run(ds):
+        sources = {s: Source(rows[s], page_size=25) for s in symbols}
+
+        def poll(now, **kw):
+            paging.ingest_exchange(spark, catalog, sources, ds, "x", "1m", now_ms=now,
+                                   max_workers=2, **kw)
+
+        poll(T0 + 50 * MIN + 30_000)  # backfill; candle 50 still open
+        for s in sources.values():
+            s.redeliver = True
+        poll(T0 + 53 * MIN)
+        poll(T0 + 56 * MIN + 1, since_ms=T0 + 51 * MIN)  # explicit refetch
+        poll(T0 + 80 * MIN)
+        return ds
+
+    arrow = run(SnapshotCandleDataset(spark, str(tmp_path / "arrow")))
+    monkeypatch.setattr(paging, "ohlcv_page_table", lambda *a: None)
+    frame = run(SnapshotCandleDataset(spark, str(tmp_path / "frame")))
+
+    def rows_of(ds):
+        return sorted(tuple(r) for r in ds.read().collect())
+
+    assert rows_of(arrow) == rows_of(frame)
+    assert len(rows_of(arrow)) == 160
+    for s in symbols:
+        assert arrow.resume_offset("x", s, "1m") == frame.resume_offset("x", s, "1m") == T0 + 79 * MIN
+    assert arrow.store.manifest()["schema"] == frame.store.manifest()["schema"]
+    assert arrow.fragmentation() == frame.fragmentation()

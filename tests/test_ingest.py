@@ -6,15 +6,24 @@ across restarts (R4).
 
 from __future__ import annotations
 
+import math
+from decimal import Decimal
+
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ccxt_ohlcv_fetcher_spark.operators.ingest import (
     CandleDataset,
     drop_incomplete_tail,
     drop_overlap,
+    ohlcv_page_table,
+    price_to_decimal,
     project_ohlcv_rows,
 )
+from ccxt_ohlcv_fetcher_spark.schemas import PRICE_TYPE
 from ccxt_ohlcv_fetcher_spark.sources.catalog import Catalog, ExchangeMeta
 from ccxt_ohlcv_fetcher_spark.sources.paging import FixturePagingSource, ingest_candles
 
@@ -30,18 +39,28 @@ def grid(n: int, t0: int = T0) -> list[list]:
     ]
 
 
-@pytest.fixture(params=["logged", "plain"])
+@pytest.fixture(params=["logged", "plain", "arrow"])
 def dataset(spark, tmp_path, request):
     """Every ingest-contract test runs against BOTH layouts: the
     snapshot-logged dataset (the CLI default since round 7) and the
     plain-parquet escape hatch — same read / resume_offset /
-    append_idempotent semantics."""
-    if request.param == "logged":
-        from ccxt_ohlcv_fetcher_spark.operators.candle_log import (
-            SnapshotCandleDataset,
-        )
+    append_idempotent semantics. ``arrow`` is the logged dataset fed
+    every batch as the pyarrow table a paging loop hands it, so the
+    driver-side commit path meets the same contract."""
+    from ccxt_ohlcv_fetcher_spark.operators.candle_log import (
+        SnapshotCandleDataset,
+    )
 
+    class ArrowFed(SnapshotCandleDataset):
+        def append_idempotent(self, batch, *a, **kw):
+            if isinstance(batch, DataFrame):
+                batch = batch.toArrow()
+            return super().append_idempotent(batch, *a, **kw)
+
+    if request.param == "logged":
         return SnapshotCandleDataset(spark, str(tmp_path / "candles"))
+    if request.param == "arrow":
+        return ArrowFed(spark, str(tmp_path / "candles"))
     return CandleDataset(spark, str(tmp_path / "candles"))
 
 
@@ -139,6 +158,87 @@ def test_ingest_loop_trims_open_candle(spark, dataset):
     src = FixturePagingSource(rows, page_size=100)
     ingest_candles(spark, src, dataset, "e", "S/X", "1m", now_ms=now, since_ms=T0)
     assert dataset.read().count() == 9
+
+
+@pytest.mark.parametrize("timeframe", ["1M", "1w"])
+def test_ingest_loop_calendar_timeframes(spark, dataset, timeframe):
+    """Calendar and week timeframes page through the loop (the
+    reference accepts ``(\\d+)[smhdwMy]``, `:142,159-162`): the driver's
+    candle-close rule keeps exactly what `drop_incomplete_tail` keeps,
+    for the R10 trim and for the cursor."""
+    import datetime as dt
+
+    utc = dt.timezone.utc
+    if timeframe == "1M":
+        opens = [dt.datetime(2023 + (m // 12), m % 12 + 1, 1, tzinfo=utc) for m in range(14)]
+    else:
+        opens = [dt.datetime(2023, 12, 25, tzinfo=utc) + dt.timedelta(weeks=w) for w in range(14)]
+    rows = [
+        [int(o.timestamp() * 1000), 10.0 + i, 11.0 + i, 9.0 + i, 10.5 + i, 1.5 * i]
+        for i, o in enumerate(opens)
+    ]
+    # mid-way through the 12th candle: it and the 13th/14th are open
+    now = rows[11][0] + 3 * 86_400_000
+    src = FixturePagingSource(rows, page_size=5)
+    st_ = ingest_candles(spark, src, dataset, "e", "S/X", timeframe, now_ms=now, since_ms=rows[0][0])
+    want = drop_incomplete_tail(
+        project_ohlcv_rows(spark, rows, "e", "S/X", timeframe), timeframe, now_ms=now
+    )
+    cols = ["timestamp", "open", "high", "low", "close", "volume"]
+    got = sorted(tuple(r) for r in dataset.read("e", "SX", timeframe).select(*cols).collect())
+    assert got == sorted(tuple(r) for r in want.select(*cols).collect())
+    assert len(got) == st_.rows_appended == 11
+    assert dataset.resume_offset("e", "SX", timeframe) == rows[10][0]
+    # a re-run resumes at the stored cursor and stores nothing twice
+    assert ingest_candles(spark, src, dataset, "e", "S/X", timeframe, now_ms=now).rows_appended == 0
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.floats(min_value=0, max_value=1e16, exclude_max=True), min_size=1, max_size=40))
+@example([5e-13, 2.5e-12, 1.0000000000005, 9999999999999998.0, 0.0])
+def test_price_to_decimal_matches_spark_cast(spark, xs):
+    """The driver's conversion equals Spark's ``CAST(double AS
+    decimal(38,12))`` on [0, 1e16), halfway cases included."""
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i long, x double")
+    got = dict(df.select("i", F.col("x").cast(PRICE_TYPE)).collect())
+    assert [price_to_decimal(x) for x in xs] == [got[i] for i in range(len(xs))]
+
+
+def test_price_conversion_nulls_and_spark_only_values(spark, tmp_path):
+    """None is null on both paths. Values the driver does not convert
+    (|x| >= 1e16, non-finite) send the whole page through Spark's cast,
+    so the table stores exactly what that cast stores."""
+    from ccxt_ohlcv_fetcher_spark.operators.candle_log import SnapshotCandleDataset
+
+    assert price_to_decimal(None) is None
+    assert ohlcv_page_table([[T0, None, 1.0, 1.0, 1.0, 1.0]], "e", "S/X", "1m").column("open")[0].as_py() is None
+    odd = [1e23, 8.383218505861398e16, math.inf, math.nan]
+    for x in odd:
+        assert ohlcv_page_table([[T0, x, 1.0, 1.0, 1.0, 1.0]], "e", "S/X", "1m") is None
+    rows = [[T0 + i * MIN, x, 2.5e-12, None, 1.0000000000005, 5e-13] for i, x in enumerate(odd)]
+    ds = SnapshotCandleDataset(spark, str(tmp_path / "candles"))
+    ingest_candles(
+        spark, FixturePagingSource(rows), ds, "e", "S/X", "1m",
+        now_ms=T0 + 10 * MIN, since_ms=T0,
+    )
+    cols = ["timestamp", "open", "high", "low", "close", "volume"]
+    want = project_ohlcv_rows(spark, rows, "e", "S/X", "1m").select(*cols).collect()
+    got = ds.read().select(*cols).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    stored = {r["timestamp"]: r["open"] for r in got}
+    assert stored[T0] == Decimal("99999999999999990000000")
+    assert stored[T0 + MIN] == Decimal("83832185058613984")
+    # values outside the `timestamp long, <price> double` schema (int or
+    # bool prices, a float timestamp) are refused by the Spark projection,
+    # so the driver path must not store them either
+    ts = T0 + 8 * MIN
+    for r in ([ts, 100, 1.0, 1.0, 1.0, 1.0], [ts, 1.0, 1.0, 1.0, 1.0, True], [float(ts), 1.0, 1.0, 1.0, 1.0, 1.0]):
+        assert ohlcv_page_table([r], "e", "S/X", "1m") is None
+        with pytest.raises(Exception) as spark_err:
+            project_ohlcv_rows(spark, [r], "e", "S/X", "1m")
+        with pytest.raises(type(spark_err.value)):
+            ingest_candles(spark, FixturePagingSource([r]), ds, "e", "S/X", "1m", now_ms=T0 + 10 * MIN)
+    assert ds.read().count() == len(rows)
 
 
 def test_catalog_validation():
